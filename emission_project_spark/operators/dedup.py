@@ -50,13 +50,3 @@ def union_distinct(*dfs: DataFrame) -> DataFrame:
         out = out.unionByName(d)
     return out.distinct()
 
-
-def exact_dedup(df: DataFrame, keys: Sequence[str] | None = None) -> DataFrame:
-    """Exact full-row (or key-subset) dedup via hash aggregation.
-
-    The scale path for exact dedup on 100 TB: a hash-partitioned
-    group-by on the key hash, map-side partial aggregation included.
-    """
-    if keys:
-        return dedup_subset(df, keys)
-    return df.distinct()

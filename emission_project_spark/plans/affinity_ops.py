@@ -91,7 +91,7 @@ def _parquet_row_count(sf_dir: str, table: str):
             else [path]
         )
         return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-    except OSError:
+    except (OSError, KeyError, ValueError):
         return None
 
 

@@ -12,6 +12,14 @@ one you would also set on a 1000-executor cluster:
 - parquet nanos-as-long: the driver testdata's ``events`` table is
   written with TIMESTAMP(NANOS) which vanilla Spark refuses to read;
   we read it as long and convert (catalog/tables.py).
+- partition discovery one task per task slot: above 32 sub-paths Spark
+  lists a directory tree with a parallel job of min(sub-paths,
+  ``parallelPartitionDiscovery.parallelism``) tasks, and that conf's
+  default (10000) makes it one task per directory — one per day of a
+  ``date_id``-partitioned fact. Each task lists one tiny directory, so
+  task launch is the whole cost: on a 4-core host (``local[4]``),
+  ``Warehouse.read`` of a 1,095-partition fact took 2.65 s with 1,095
+  listing tasks and 0.14 s with 4.
 """
 
 from __future__ import annotations
@@ -21,6 +29,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+DISCOVERY_PARALLELISM = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
 
 
 def get_spark(
@@ -59,14 +68,19 @@ def get_spark(
     # thresholds) over these local[N] defaults — and how
     # tools/benchdiff.py --ab-run runs config A/Bs through its
     # existing --env-old/--env-new plumbing.
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    env_conf = os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")
-    for kv in env_conf.split(";"):
+    overrides = dict(extra_conf or {})
+    for kv in os.environ.get("SPARK_GRAFT_EXTRA_CONF", "").split(";"):
         if "=" in kv:
             k, v = kv.split("=", 1)
-            builder = builder.config(k.strip(), v)
-    return builder.getOrCreate()
+            overrides[k.strip()] = v
+    for k, v in overrides.items():
+        builder = builder.config(k, v)
+    spark = builder.getOrCreate()
+    if DISCOVERY_PARALLELISM not in overrides:
+        # the session's task slots, known only once the context exists
+        # (honours master="local[N]" as well as a cluster's cores)
+        spark.conf.set(DISCOVERY_PARALLELISM, str(spark.sparkContext.defaultParallelism))
+    return spark
 
 
 def v2_parquet_conf() -> dict[str, str]:

@@ -10,6 +10,9 @@ format's MERGE; the swap keeps us dependency-free here.
 
 Partitioning: ``append``/``overwrite_atomic`` accept ``partition_by``
 (e.g. the fact partitioned by date_id) so scans prune at 100 TB.
+Pruning keeps a scan's data cheap however many dates the fact holds;
+listing those date directories is one Spark task per task slot, not one
+per partition (``session.get_spark`` sets the discovery parallelism).
 """
 
 from __future__ import annotations
@@ -49,8 +52,6 @@ class Warehouse:
         if self.exists(table):
             df = self.spark.read.parquet(self.path(table))
             if schema is not None:
-                from pyspark.sql import functions as F
-
                 df = df.select(
                     *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
                 )
@@ -160,8 +161,6 @@ class Warehouse:
             if sort_by:
                 df = df.sortWithinPartitions(*(partition_by + sort_by))
         elif sort_by:
-            from pyspark.sql import functions as F
-
             df = df.repartitionByRange(
                 n_files, *[F.col(c) for c in sort_by]
             ).sortWithinPartitions(*sort_by)
@@ -221,8 +220,6 @@ class Warehouse:
         table intact. On a transactional format this is DELETE WHERE
         EXISTS; pure parquet pays one table rewrite, which is why
         deletion requests batch daily, not per-request."""
-        from pyspark.sql import functions as F
-
         from emission_project_spark.operators.joins import anti_join
 
         current = self.read(table)

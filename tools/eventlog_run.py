@@ -12,8 +12,9 @@ decisions with `--analyze` instead of guessing from wall-clock.
 
     python tools/eventlog_run.py --analyze LOG_FILE [LOG_FILE ...]
         per-run roll-up: wall, task count/time/GC, shuffle bytes,
-        spill, top stages by task time, AQE re-plans — one JSON line
-        per log, aligned for eyeball diffing.
+        spill, top stages by task time, AQE re-plans, file-listing
+        jobs and their tasks — one JSON line per log, aligned for
+        eyeball diffing.
 """
 
 from __future__ import annotations
@@ -24,6 +25,11 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+# Description Spark gives its parallel file-listing jobs: one task per
+# listed path unless the discovery parallelism caps it, so a wide one
+# is a per-directory listing of a partitioned table.
+LISTING_JOB = "Listing leaf files and directories"
 
 
 def run_once(sf_dir: str, query: str, log_dir: str) -> dict:
@@ -58,7 +64,8 @@ def run_once(sf_dir: str, query: str, log_dir: str) -> dict:
 
 def analyze(path: str) -> dict:
     """Aggregate one Spark event log into the metrics that can carry an
-    episodic slow mode: task time, GC, shuffle, spill, AQE re-plans."""
+    episodic slow mode: task time, GC, shuffle, spill, AQE re-plans,
+    and the file-listing jobs with their task count."""
     out = {
         "log": os.path.basename(path),
         "tasks": 0,
@@ -74,9 +81,12 @@ def analyze(path: str) -> dict:
         "py_sent_mb": 0.0,   # data sent to Python workers
         "py_ret_mb": 0.0,    # data returned from Python workers
         "py_run_s": 0.0,     # time to run Python workers
+        "listing_jobs": 0,
+        "listing_tasks": 0,
         "stages": {},  # stage id -> task seconds
     }
     t_start = t_end = None
+    listing_stages: set[int] = set()
     with open(path) as fh:
         for line in fh:
             try:
@@ -88,6 +98,11 @@ def analyze(path: str) -> dict:
                 t_start = ev.get("Timestamp")
             elif kind == "SparkListenerApplicationEnd":
                 t_end = ev.get("Timestamp")
+            elif kind == "SparkListenerJobStart":
+                props = ev.get("Properties") or {}
+                if (props.get("spark.job.description") or "").startswith(LISTING_JOB):
+                    out["listing_jobs"] += 1
+                    listing_stages.update(ev.get("Stage IDs") or [])
             elif kind.endswith("AdaptiveExecutionUpdate"):
                 out["aqe_updates"] += 1
             elif kind == "SparkListenerTaskEnd":
@@ -95,6 +110,8 @@ def analyze(path: str) -> dict:
                 info = ev.get("Task Info") or {}
                 dur = (info.get("Finish Time", 0) - info.get("Launch Time", 0)) / 1e3
                 out["tasks"] += 1
+                if ev.get("Stage ID") in listing_stages:
+                    out["listing_tasks"] += 1
                 out["task_time_s"] += dur
                 out["max_task_s"] = max(out["max_task_s"], dur)
                 out["gc_s"] += m.get("JVM GC Time", 0) / 1e3
