@@ -35,9 +35,8 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def spread_input(df: DataFrame) -> DataFrame:
-    """Widen narrow inputs before CPU-heavy fan-out work (r14 — the
-    extensions/dedup.py ``_spread`` pattern promoted to a shared
-    utility).
+    """Widen narrow inputs before CPU-heavy fan-out work (r14; shared
+    by the dedup, affinity and curation tokenizers).
 
     A parquet table written as one row group scans as ONE populated
     partition no matter how many byte-range splits the planner cuts

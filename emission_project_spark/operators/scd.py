@@ -66,7 +66,13 @@ def scd2_apply(
     - current rows whose attributes changed: emitted closed
       (``valid_to = batch_ts``, ``is_current`` false) AND re-emitted as
       the new open version with the batch's attributes;
-    - brand-new keys: emitted as open versions.
+    - brand-new keys: emitted as open versions;
+    - rows with a NULL ``is_current`` (not a state ``scd2_init`` or this
+      operator writes, but a hand-edited or foreign dim can hold one):
+      passed through untouched as history — the join condition
+      ``... & cur.is_current`` is NULL for them, so they never match.
+      An update for such a key therefore finds no current version and
+      adds a fresh open version beside the NULL row, which stays as is.
 
     The update batch is deduplicated to one row per key before folding
     (last-write-wins needs an ordering column — callers with intra-batch

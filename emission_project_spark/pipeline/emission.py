@@ -3,10 +3,14 @@
 re-expressed as one lazy Spark job.
 
 Per-run shape (reference lifecycle, SURVEY §3.1): extract CSV feeds →
-incremental dimension loads (dedup → anti-join vs warehouse state →
-surrogate keys → append) → fact assembly (null-safe car join → derived
-total_emission → driver/date/city/country joins → 7-id dedup →
-incremental append) → roll-up views.
+dimension loads (dedup the batch on its natural key) → fact assembly
+(null-safe car join → derived total_emission → driver/date/city/country
+joins → 7-id dedup) → roll-up views. All five tables load through ONE
+insert step, ``EmissionPipeline._insert`` — the reference's per-table
+count-guarded anti-join (``dags/emission-dag.py:69-212``, one copy per
+table there): anti-join vs warehouse state (+ id rank, dims) → persist +
+count → stop at 0 → FK check (fact) / id offset past the table's max
+(dims) → append.
 
 Catalyst plans the whole fact assembly as broadcast-hash joins over a
 single scan of the logbook; at 100 TB the fact partition key is
@@ -37,7 +41,7 @@ from emission_project_spark.operators.dedup import dedup_subset
 from emission_project_spark.operators.incremental import incremental_insert
 from emission_project_spark.operators.joins import join_nullsafe
 from emission_project_spark.operators.keys import add_surrogate_key
-from emission_project_spark.operators.validation import validate_fks
+from emission_project_spark.operators.validation import FkSpec, validate_fks
 from emission_project_spark.sources.csv_feed import archive_consumed, read_feed
 from emission_project_spark.sources.warehouse import Warehouse
 
@@ -51,6 +55,23 @@ class RunStats:
     # Spark is lazy, but every stage here ends in an action (count or
     # append), so the boundary times are real work, not plan-building.
     stage_seconds: dict[str, float] = field(default_factory=dict)
+
+
+@contextmanager
+def _stage(stats: RunStats, name: str):
+    """Record the wall-clock of the enclosed stage as
+    ``stats.stage_seconds[name]``."""
+    t0 = time.perf_counter()
+    yield
+    stats.stage_seconds[name] = round(time.perf_counter() - t0, 3)
+
+
+#: (view name, grouping column) of the three roll-ups (README.md:3)
+_ROLLUPS = (
+    ("emission_by_brand", "brand"),
+    ("emission_by_car", "car_id"),
+    ("emission_by_driver", "driver_id"),
+)
 
 
 class EmissionPipeline:
@@ -72,6 +93,57 @@ class EmissionPipeline:
         row = dim.agg(F.max(id_col).alias("m")).first()
         return int(row.m) + 1 if row.m is not None else 1
 
+    def _insert(
+        self,
+        batch: DataFrame,
+        current: DataFrame,
+        table: str,
+        key: list[str],
+        stats: RunStats,
+        id_col: str | None = None,
+        order_by: list[str] | None = None,
+        fks: list[FkSpec] | None = None,
+        partition_by: list[str] | None = None,
+    ) -> int:
+        """The one incremental-load step every table goes through: rows
+        of ``batch`` unseen in ``current`` (the table's state) by ``key``
+        (null-safe anti-join), counted; at 0 nothing else runs. Otherwise
+        the rows are FK-checked against ``fks`` into
+        ``stats.fk_violations``, given SERIAL-style ``id_col`` ids in
+        ``order_by`` order after the table's current max, and appended
+        to ``table``. Returns the count."""
+        new_rows = incremental_insert(current, batch, key)
+        if id_col:
+            # rank 1..n inside the persisted set, so the append reads the
+            # cache without another exchange; the offset past the table's
+            # max is probed only when there are rows to append
+            new_rows = add_surrogate_key(new_rows, id_col, order_by=order_by)
+        # persist the (batch-sized) insert set: the count guard, the FK
+        # check and the append are separate actions — without it the
+        # feed scan + dedup + anti-join + rank chain (for the fact, the
+        # whole fact assembly) executes once per action (r10 verdict
+        # task #5; MEMORY_AND_DISK, so a huge batch spills instead of
+        # OOMing)
+        new_rows = new_rows.persist()
+        try:
+            n = new_rows.count()
+            if n:
+                if fks:
+                    # FK enforcement (SURVEY §1.3: DDL constraints become
+                    # an anti-join orphan check) from the CACHED batch:
+                    # 1.4 s at x100 vs 3.9 s as a recompute; an observe-
+                    # counter ride on the append measured +55 s, reverted
+                    stats.fk_violations = validate_fks(new_rows, fks)
+                rows = new_rows
+                if id_col:
+                    offset = self._next_id(current, id_col) - 1
+                    rows = rows.withColumn(id_col, F.col(id_col) + offset)
+                self.wh.append(rows.select(*current.columns), table, partition_by=partition_by)
+        finally:
+            new_rows.unpersist()
+        stats.inserted[table] = n
+        return n
+
     def _load_dim(
         self,
         batch: DataFrame,
@@ -82,33 +154,16 @@ class EmissionPipeline:
         order_by: list[str],
         stats: RunStats,
     ) -> DataFrame:
-        """Incremental dimension load: dedup batch → anti-join vs
-        warehouse → SERIAL-style ids in sorted order → append.
-        Returns the refreshed dimension."""
-        t0 = time.perf_counter()
-        current = self.wh.read(table, schema)
-        fresh = dedup_subset(batch, natural_key)
-        new_rows = incremental_insert(current, fresh, natural_key)
-        new_rows = add_surrogate_key(
-            new_rows, id_col, order_by=order_by, start=self._next_id(current, id_col)
-        )
-        # persist the (batch-sized) insert set: the count guard and the
-        # append are two actions — without it the feed scan + dedup +
-        # anti-join + rank chain executes twice per dimension (r10
-        # verdict task #5; MEMORY_AND_DISK, so a huge batch spills
-        # instead of OOMing)
-        new_rows = new_rows.persist()
-        try:
-            n = new_rows.count()
-            if n:
-                self.wh.append(
-                    new_rows.select(*[f.name for f in schema.fields]), table
-                )
-        finally:
-            new_rows.unpersist()
-        stats.inserted[table] = n
-        stats.stage_seconds[f"dim_{table}"] = round(time.perf_counter() - t0, 3)
-        return self.wh.read(table, schema)
+        """Incremental dimension load: dedup the batch on its natural key
+        and insert the unseen rows with SERIAL-style ids in sorted order.
+        Returns the refreshed dimension (the state already read, when
+        nothing was inserted)."""
+        with _stage(stats, f"dim_{table}"):
+            current = self.wh.read(table, schema)
+            if self._insert(dedup_subset(batch, natural_key), current, table, natural_key, stats,
+                            id_col=id_col, order_by=order_by):
+                current = self.wh.read(table, schema)
+        return current
 
     # --- the run ---
 
@@ -116,29 +171,29 @@ class EmissionPipeline:
         """One scheduled run. ``incoming_root`` contains the three feed
         dirs (``drivers_incoming_data`` etc. per README.md:58)."""
         stats = RunStats()
-        t0 = time.perf_counter()
-        self.init_warehouse()
-        stats.stage_seconds["init"] = round(time.perf_counter() - t0, 3)
+        with _stage(stats, "init"):
+            self.init_warehouse()
 
-        t0 = time.perf_counter()
-        drivers_raw, f1 = read_feed(
-            self.spark, os.path.join(incoming_root, "drivers_incoming_data"), S.DRIVERS_FEED
-        )
-        vehicles_raw, f2 = read_feed(
-            self.spark,
-            os.path.join(incoming_root, "vehicle_fuel_consumptions_incoming_data"),
-            S.VEHICLES_FEED_RAW,
-            rename=S.VEHICLES_RENAME,
-        )
-        logbook, f3 = read_feed(
-            self.spark, os.path.join(incoming_root, "drivers_logbook_incoming_data"), S.LOGBOOK_FEED
-        )
-        # The logbook feed fans out to FIVE consumers (country batch ×2
-        # legs, city batch ×2 legs, fact assembly) each ending in its
-        # own action — persist the CSV parse once instead of re-reading
-        # the feed per consumer (r10 verdict task #5)
-        logbook = logbook.persist()
-        stats.stage_seconds["extract"] = round(time.perf_counter() - t0, 3)
+        with _stage(stats, "extract"):
+            drivers_raw, f1 = read_feed(
+                self.spark, os.path.join(incoming_root, "drivers_incoming_data"), S.DRIVERS_FEED
+            )
+            vehicles_raw, f2 = read_feed(
+                self.spark,
+                os.path.join(incoming_root, "vehicle_fuel_consumptions_incoming_data"),
+                S.VEHICLES_FEED_RAW,
+                rename=S.VEHICLES_RENAME,
+            )
+            logbook, f3 = read_feed(
+                self.spark,
+                os.path.join(incoming_root, "drivers_logbook_incoming_data"),
+                S.LOGBOOK_FEED,
+            )
+            # The logbook feed fans out to FIVE consumers (country batch
+            # ×2 legs, city batch ×2 legs, fact assembly) each ending in
+            # its own action — persist the CSV parse once instead of
+            # re-reading the feed per consumer (r10 verdict task #5)
+            logbook = logbook.persist()
 
         # every logbook consumer (the four dim loads AND the fact
         # assembly) runs under one try/finally: a failure in any dim
@@ -206,18 +261,16 @@ class EmissionPipeline:
                 stats=stats,
             )
 
-            t0 = time.perf_counter()
-            self._load_fact(logbook, drivers, cars, country, city, stats)
+            with _stage(stats, "fact"):
+                self._load_fact(logbook, drivers, cars, country, city, stats)
         finally:
             logbook.unpersist()
-        stats.stage_seconds["fact"] = round(time.perf_counter() - t0, 3)
 
         if archive_root:
             # crash-safe ordering: archive only after all writes landed
-            t0 = time.perf_counter()
-            for files, sub in ((f1, "drivers_used_data"), (f2, "vehicle_fuel_consumptions_used_data"), (f3, "drivers_logbook_used_data")):
-                stats.archived += archive_consumed(files, os.path.join(archive_root, sub))
-            stats.stage_seconds["archive"] = round(time.perf_counter() - t0, 3)
+            with _stage(stats, "archive"):
+                for files, sub in ((f1, "drivers_used_data"), (f2, "vehicle_fuel_consumptions_used_data"), (f3, "drivers_logbook_used_data")):
+                    stats.archived += archive_consumed(files, os.path.join(archive_root, sub))
         return stats
 
     def _load_fact(
@@ -229,9 +282,6 @@ class EmissionPipeline:
         city: DataFrame,
         stats: RunStats,
     ) -> None:
-        if logbook.isEmpty():
-            stats.inserted["car_driver_log"] = 0
-            return
         dates = self.wh.read("date", S.DATE_DIM)
 
         # J6: attach car_id + co2 over the 6-col null-safe attribute FK
@@ -283,71 +333,52 @@ class EmissionPipeline:
 
         fact = fact.select(*[f.name for f in S.FACT_CAR_DRIVER_LOG.fields])
         # D1 + J11: in-batch dedup then incremental anti-join, both on
-        # the 7-id natural key (null-safe: orphan ids are null)
-        fact = dedup_subset(fact, S.FACT_NK, tiebreaker=["distance_km", "total_emission"])
-        current = self.wh.read("car_driver_log", S.FACT_CAR_DRIVER_LOG)
-        # persist the insert batch: the count guard, the FK counters,
-        # and the append previously each re-executed the WHOLE fact
-        # assembly (the 66-83%-of-wall stage) — now it materializes once
-        new_rows = incremental_insert(current, fact, S.FACT_NK).persist()
-        try:
-            n = new_rows.count()
-            if n:
-                # FK enforcement (SURVEY §1.3: the reference's DDL
-                # constraints become an anti-join orphan check),
-                # validated from the CACHED batch — 1.4 s at x100 vs
-                # 3.9 s as a recompute. (An observe-counter ride on the
-                # append action was built and MEASURED WORSE: +55 s at
-                # x100 — the metric joins de-optimized the write stage —
-                # and reverted; `fk_violation_observation` remains for
-                # callers whose action isn't a partitioned write.)
-                stats.fk_violations = validate_fks(
-                    new_rows,
-                    [
-                        ("fact.car_id->cars", "car_id", cars, "car_id"),
-                        ("fact.driver_id->drivers", "driver_id", drivers, "driver_id"),
-                        ("fact.start_city_id->city", "start_city_id", city, "city_id"),
-                        ("fact.target_city_id->city", "target_city_id", city, "city_id"),
-                        ("fact.start_country_id->country", "start_country_id", country, "country_id"),
-                        ("fact.target_country_id->country", "target_country_id", country, "country_id"),
-                        ("fact.date_id->date", "date_id", dates, "date_id"),
-                    ],
-                )
-                # Fact partitioned by date_id (module docstring / SURVEY
-                # §3.1): date-bounded roll-ups prune to the touched
-                # partitions instead of scanning the whole 100 TB fact;
-                # the append co-locates date_id before the write (the
-                # small-files fix measured 134 → 14 s in Warehouse.append).
-                self.wh.append(new_rows, "car_driver_log", partition_by=["date_id"])
-        finally:
-            new_rows.unpersist()
-        stats.inserted["car_driver_log"] = n
+        # the 7-id natural key (null-safe: orphan ids are null). Fact
+        # partitioned by date_id (module docstring / SURVEY §3.1):
+        # date-bounded roll-ups prune to the touched partitions instead
+        # of scanning the whole 100 TB fact; the append co-locates
+        # date_id before the write (the small-files fix measured 134 →
+        # 14 s in Warehouse.append).
+        self._insert(
+            dedup_subset(fact, S.FACT_NK, tiebreaker=["distance_km", "total_emission"]),
+            self.fact_df(),
+            "car_driver_log",
+            S.FACT_NK,
+            stats,
+            fks=[
+                ("fact.car_id->cars", "car_id", cars, "car_id"),
+                ("fact.driver_id->drivers", "driver_id", drivers, "driver_id"),
+                ("fact.start_city_id->city", "start_city_id", city, "city_id"),
+                ("fact.target_city_id->city", "target_city_id", city, "city_id"),
+                ("fact.start_country_id->country", "start_country_id", country, "country_id"),
+                ("fact.target_country_id->country", "target_country_id", country, "country_id"),
+                ("fact.date_id->date", "date_id", dates, "date_id"),
+            ],
+            partition_by=["date_id"],
+        )
 
     # --- consumption surface (README.md:3 roll-ups, A2) ---
 
     def fact_df(self) -> DataFrame:
         return self.wh.read("car_driver_log", S.FACT_CAR_DRIVER_LOG)
 
+    def _rollup(self, fact: DataFrame, by: str) -> DataFrame:
+        """Total emission per ``by`` over ``fact`` (any projection with
+        car_id, driver_id and total_emission); ``brand`` is attached from
+        the cars dim."""
+        if by == "brand":
+            cars = self.wh.read("cars", S.CARS_DIM).select("car_id", "brand")
+            fact = fact.join(F.broadcast(cars), "car_id", "left")
+        return fact.groupBy(by).agg(F.sum("total_emission").alias("total_emission"))
+
     def emission_by_brand(self) -> DataFrame:
-        cars = self.wh.read("cars", S.CARS_DIM)
-        return (
-            self.fact_df()
-            .join(F.broadcast(cars.select("car_id", "brand")), "car_id", "left")
-            .groupBy("brand")
-            .agg(F.sum("total_emission").alias("total_emission"))
-        )
+        return self._rollup(self.fact_df(), "brand")
 
     def emission_by_car(self) -> DataFrame:
-        return (
-            self.fact_df().groupBy("car_id").agg(F.sum("total_emission").alias("total_emission"))
-        )
+        return self._rollup(self.fact_df(), "car_id")
 
     def emission_by_driver(self) -> DataFrame:
-        return (
-            self.fact_df()
-            .groupBy("driver_id")
-            .agg(F.sum("total_emission").alias("total_emission"))
-        )
+        return self._rollup(self.fact_df(), "driver_id")
 
     @contextmanager
     def rollup_views(self):
@@ -371,23 +402,6 @@ class EmissionPipeline:
             "car_id", "driver_id", "total_emission"
         ).persist()
         try:
-            cars = self.wh.read("cars", S.CARS_DIM)
-            yield {
-                "emission_by_brand": (
-                    base.join(
-                        F.broadcast(cars.select("car_id", "brand")),
-                        "car_id",
-                        "left",
-                    )
-                    .groupBy("brand")
-                    .agg(F.sum("total_emission").alias("total_emission"))
-                ),
-                "emission_by_car": base.groupBy("car_id").agg(
-                    F.sum("total_emission").alias("total_emission")
-                ),
-                "emission_by_driver": base.groupBy("driver_id").agg(
-                    F.sum("total_emission").alias("total_emission")
-                ),
-            }
+            yield {name: self._rollup(base, by) for name, by in _ROLLUPS}
         finally:
             base.unpersist()

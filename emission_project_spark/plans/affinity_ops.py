@@ -25,7 +25,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from emission_project_spark.catalog.tables import load_table
+from emission_project_spark.catalog.tables import load_table, spread_input
 from emission_project_spark.functions.text import tokens
 from emission_project_spark.functions.vectors import cosine_similarity
 from emission_project_spark.plans.registry import register
@@ -39,28 +39,33 @@ from emission_project_spark.plans.registry import register
 TRIANGLE_REPART_EDGE_THRESHOLD = 20_000_000
 
 
-def _parquet_column_range(sf_dir: str, table: str, column: str):
-    """(min, max) of a column from parquet FOOTER statistics — zero
-    Spark jobs (ADVICE r10: the eager min/max probe cost triangle and
-    pagerank one column scan per invocation each). Returns None when
-    any row group lacks min/max stats (exotic writers) — callers fall
-    back to the Spark aggregate."""
+def _parquet_footers(sf_dir: str, table: str, summarize):
+    """``summarize`` applied to the footer metadata of every file of
+    ``table`` — zero Spark jobs (ADVICE r10: an eager aggregate probe
+    cost one column scan per invocation). None on any surprise (a
+    missing or truncated file, a column the footer lacks): callers fall
+    back to default sizing or the Spark aggregate."""
     import pyarrow.parquet as pq
 
     path = os.path.join(sf_dir, f"{table}.parquet")
     try:
         files = (
-            [
-                os.path.join(path, f)
-                for f in os.listdir(path)
-                if f.endswith(".parquet")
-            ]
+            [os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")]
             if os.path.isdir(path)
             else [path]
         )
+        return summarize([pq.ParquetFile(f).metadata for f in files])
+    except (OSError, KeyError, ValueError):
+        return None
+
+
+def _parquet_column_range(sf_dir: str, table: str, column: str):
+    """(min, max) of a column from footer statistics; None when any row
+    group lacks min/max stats (exotic writers)."""
+
+    def span(footers):
         lo = hi = None
-        for f in files:
-            md = pq.ParquetFile(f).metadata
+        for md in footers:
             names = [md.schema.column(i).name for i in range(md.num_columns)]
             idx = names.index(column)
             for rg in range(md.num_row_groups):
@@ -70,29 +75,13 @@ def _parquet_column_range(sf_dir: str, table: str, column: str):
                 lo = st.min if lo is None else min(lo, st.min)
                 hi = st.max if hi is None else max(hi, st.max)
         return (lo, hi) if lo is not None else None
-    except (OSError, KeyError, ValueError):
-        return None
+
+    return _parquet_footers(sf_dir, table, span)
 
 
 def _parquet_row_count(sf_dir: str, table: str):
-    """Total row count from parquet footers — zero Spark jobs (the
-    _parquet_column_range pattern); None on any surprise."""
-    import pyarrow.parquet as pq
-
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    try:
-        files = (
-            [
-                os.path.join(path, f)
-                for f in os.listdir(path)
-                if f.endswith(".parquet")
-            ]
-            if os.path.isdir(path)
-            else [path]
-        )
-        return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-    except (OSError, KeyError, ValueError):
-        return None
+    """Total row count from footers."""
+    return _parquet_footers(sf_dir, table, lambda footers: sum(md.num_rows for md in footers))
 
 
 def _copurchase_baskets(
@@ -592,16 +581,14 @@ def _shingles5(docs: DataFrame) -> DataFrame:
     """Distinct 5-gram word shingles per document (Spark twin of
     _SHINGLE5_SQL).
 
-    r14: ``_spread`` before the tokenizer — the documents table scans
+    r14: ``spread_input`` before the tokenizer — the documents table scans
     as ONE populated partition (single parquet row group at every
     measured SF, and an unsplittable-input hazard at any scale, guide
     §2.5), so the regex tokenize + 5-gram explode ran on one core: the
     sf10 eventlog showed a 70 s 1-task stage, 40 % of the query's
     wall. The conditional repartition is a ~56 MB shuffle at sf10 and
     a no-op on inputs that already scan wide."""
-    from emission_project_spark.extensions.dedup import _spread
-
-    toked = _spread(docs).select(
+    toked = spread_input(docs).select(
         "doc_id", tokens(F.lower(F.col("text"))).alias("t")
     ).filter(F.size("t") >= 5)
     sh = toked.select(

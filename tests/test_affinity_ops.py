@@ -530,15 +530,21 @@ def test_prefix_join_positional_filter_lossless_randomized(spark, tmp_path):
 
 
 def test_parquet_row_count_falls_back_on_corrupt_footer(tmp_path):
-    """A truncated parquet file is a plan-time surprise: the footer probe
-    returns None (default sizing), it does not crash plan-build."""
-    from emission_project_spark.plans.affinity_ops import _parquet_row_count
+    """A truncated parquet file is a plan-time surprise: both footer
+    probes return None (default sizing / Spark aggregate), they do not
+    crash plan-build."""
+    from emission_project_spark.plans.affinity_ops import (
+        _parquet_column_range,
+        _parquet_row_count,
+    )
 
     good = tmp_path / "lineitem.parquet"
     good.mkdir()
     pq.write_table(pa.table({"l_orderkey": list(range(10))}), str(good / "part-0.parquet"))
     assert _parquet_row_count(str(tmp_path), "lineitem") == 10
+    assert _parquet_column_range(str(tmp_path), "lineitem", "l_orderkey") == (0, 9)
 
     data = (good / "part-0.parquet").read_bytes()
     (good / "part-1.parquet").write_bytes(data[: len(data) // 2])
     assert _parquet_row_count(str(tmp_path), "lineitem") is None
+    assert _parquet_column_range(str(tmp_path), "lineitem", "l_orderkey") is None

@@ -223,34 +223,6 @@ def test_fk_violation_counts(spark):
     assert got == {"fk_a": 1, "fk_b": 4}
 
 
-def test_fk_violation_observation_rides_action(spark):
-    """The observe-based twin: counters computed by the SAME action the
-    caller runs (here a noop write), schema projected back to the
-    child's columns. (Built for r10 verdict task #5; the pipeline's
-    partitioned fact write measured WORSE with the ride and uses the
-    cached validate_fks instead — the operator remains for actions
-    without a partitioned-write de-optimization.)"""
-    from emission_project_spark.operators.validation import (
-        fk_violation_observation,
-    )
-
-    child = spark.createDataFrame(
-        [(1, 10), (2, 10), (3, 99), (4, None), (5, 20)],
-        "id int, dim_id int",
-    )
-    parent = spark.createDataFrame([(10, "a"), (20, "b")], "pk int, name string")
-    inst, obs = fk_violation_observation(
-        child,
-        [
-            ("fk_a", "dim_id", parent, "pk"),
-            ("fk_b", "id", parent, "pk"),  # every id orphaned vs pk
-        ],
-    )
-    assert inst.columns == child.columns  # write schema untouched
-    inst.write.format("noop").mode("overwrite").save()
-    assert {k: int(v) for k, v in obs.get.items()} == {"fk_a": 1, "fk_b": 5}
-
-
 def test_jsonl_corpus_roundtrip_and_quarantine(spark, tmp_path):
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 

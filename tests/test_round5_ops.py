@@ -197,6 +197,30 @@ class TestScd2:
         # exactly at the boundary the NEW version is current (valid_from <= ts)
         assert scd2_as_of(d1, "2024-06-01").filter(F.col("k") == 1).first().seg == "A2"
 
+    def test_null_is_current_passes_through_as_history(self, spark):
+        from emission_project_spark.operators.scd import scd2_apply
+
+        dim = self._dim(spark).withColumn(
+            "is_current",
+            F.when(F.col("k") == 2, F.lit(None).cast("boolean")).otherwise(F.col("is_current")),
+        )
+        # untouched by the batch: the NULL row passes through unchanged
+        out = scd2_apply(dim, self._upd(spark, [(1, "A2", 10.0)]), "k", ["seg", "bal"], "2024-06-01")
+        k2 = [(r.seg, str(r.valid_from)[:10], r.valid_to, r.is_current)
+              for r in out.filter(F.col("k") == 2).collect()]
+        assert k2 == [("B", "2024-01-01", None, None)]
+
+        # an update for that key never matches it: the NULL row stays as
+        # is and a fresh open version is added beside it
+        out = scd2_apply(dim, self._upd(spark, [(2, "B2", 20.0)]), "k", ["seg", "bal"], "2024-06-01")
+        k2 = sorted(
+            ((r.seg, str(r.valid_from)[:10], r.valid_to, r.is_current)
+             for r in out.filter(F.col("k") == 2).collect()),
+            key=lambda t: t[0],
+        )
+        assert k2 == [("B", "2024-01-01", None, None), ("B2", "2024-06-01", None, True)]
+        assert out.count() == 4
+
 
 class TestMergeAggState:
     def test_merge_equals_recompute_and_rejects_empty(self, spark):
